@@ -462,31 +462,6 @@ def minhash_sig_expr(
     )
 
 
-def lsh_band_structs(sig_col, n_bands: int, rows_per_band: int):
-    """Array of (band, bkey) structs for one signature column — the
-    banding expression shared by :func:`lsh_bands` (batch, after a
-    groupBy) and the stateful streaming path (per-row, no shuffle)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(
-                                sig_col, bi * rows_per_band + ri + 1
-                            ).cast("string")
-                            for ri in range(rows_per_band)
-                        ],
-                    )
-                ).alias("bkey"),
-            )
-            for bi in range(n_bands)
-        ]
-    )
-
-
 def lsh_bands(
     signatures: DataFrame, n_bands: int, rows_per_band: int
 ) -> DataFrame:

@@ -2,22 +2,28 @@
 reference ffiec_process, R/ffiec_process.R:494-587).
 
 Per bulk zip:
-1. member manifest + multipart validation (V4);
-2. per (schedule, date): read each part (strict/repair TSV), fold with
+1. member manifest + multipart validation (V4), driver-side Python;
+2. one read pass decompresses every schedule member once, repairing
+   members with wrong-field-count lines (sources/tsv.py ``zip_lines``);
+   the pass is cached and each member's (repaired, n_bad) audit is read
+   with one small aggregate;
+3. per (schedule, date): parse each part, fold with
    full-outer-join+coalesce (J1), append the report ``date`` column,
    convert pure-percent columns, write the wide parquet
-   ``{schedule}_{YYYYMMDD}.parquet``;
-3. unpivot each wide table by value type into the five long EAV tables
-   with NULL-drop, dedup, and the fail-fast duplicate-key assertion;
-4. POR member -> institution parquet;
-5. audit rows accumulate into the process-log DataFrame (ArrayType
-   ``repairs``/``inner_files`` — the reference's attribute side-channel
-   as a real table, SURVEY.md §2.13).
+   ``{schedule}_{YYYYMMDD}.parquet``; each part's type-parse problem
+   count and the pure-percent violation count ride that write via
+   ``observe()``;
+4. POR member -> institution parquet.
 
-Where the reference writes temp wide parquet and re-scans it with
-DuckDB, here stages 2-3 are one Catalyst lineage; the wide parquet is
-still written because it is a deliverable, but the long build reads the
-in-memory plan, not the file.
+Over all zips: unpivot each wide table by value type into the five long
+EAV tables with NULL-drop, dedup, and the fail-fast duplicate-key
+assertion; then the audit rows become the process-log DataFrame
+(ArrayType ``repairs``/``inner_files`` — the reference's attribute
+side-channel as a real table, SURVEY.md §2.13).
+
+Like the reference, which writes the wide parquet and re-scans it with
+DuckDB, the long build reads the written wide files back
+(:func:`make_long_pqs`) rather than the plans that produced them.
 """
 
 from __future__ import annotations
@@ -36,10 +42,18 @@ from pyspark.sql import types as T
 from ffiec_pq_spark.functions.scalars import pct_to_prop, pct_violation
 from ffiec_pq_spark.operators.combine import combine_parts
 from ffiec_pq_spark.operators.reshape import make_long_by_type
-from ffiec_pq_spark.sources.manifest import resolve_n_parts, zip_member_manifest
+from ffiec_pq_spark.sources.manifest import member_rows, validate_parts
 from ffiec_pq_spark.sources.parquet import write_single_parquet
 from ffiec_pq_spark.sources.por import read_por
-from ffiec_pq_spark.sources.tsv import read_call_schedule
+from ffiec_pq_spark.sources.tsv import (
+    make_colspec,
+    member_audit,
+    member_stats,
+    parse_observed,
+    read_zip_member_header,
+    repair_tags,
+    zip_lines,
+)
 
 LONG_TYPE_NAMES = {
     "double": "float",
@@ -147,87 +161,79 @@ def process_zip_schedules(
 ) -> tuple[list[dict], list[dict]]:
     """Stage 2: all schedules of one zip -> wide parquet files.
 
+    Every schedule member is decompressed (and repaired) once, by one
+    cached :func:`zip_lines` pass over the zip; each member's type-parse
+    problem count rides its group's wide write via ``observe()``.
+
     Returns (wide_outputs, log_rows); each wide output dict carries the
     schedule, date, path, and part files that fed it."""
     clock = clock or _NULL_CLOCK
     with clock.stage("manifest_validate"):
-        manifest = zip_member_manifest(spark, [zip_path])
-        validation = {
-            (r["schedule"], r["date"]): r.asDict()
-            for r in resolve_n_parts(manifest).collect()
-        }
-        sched_files = (
-            manifest.filter(
-                F.col("schedule").isNotNull() & (F.col("schedule") != "por")
-            )
-            .orderBy("schedule", "date", "part", "file")
-            .collect()
-        )
-    groups: dict[tuple, list] = {}
-    for r in sched_files:
-        groups.setdefault((r["schedule"], r["date"]), []).append(r)
-
-    # whole-zip audit batch: every member's (bad, problems) counters in
-    # ONE Spark job (sources/tsv.py zip_stats_batch) instead of one
-    # collect per member — at production member counts the per-member
-    # scheduling overhead dominates the audit otherwise.  Headers are
-    # read driver-side (first-block decompression only).
-    from ffiec_pq_spark.sources.tsv import make_colspec, read_zip_member_header, zip_stats_batch
+        members = member_rows(zip_path)
+        validation = validate_parts(members)
+        groups: dict[tuple, list[str]] = {}
+        for r in sorted(
+            (r for r in members if r["schedule"] not in (None, "por")),
+            key=lambda r: (r["schedule"], r["date"], r["part"] or 0, r["file"]),
+        ):
+            groups.setdefault((r["schedule"], r["date"]), []).append(r["file"])
 
     with clock.stage("audit_batch"):
+        # headers are read driver-side (first-block decompression only)
         colspecs = {
-            r["file"]: make_colspec(
-                read_zip_member_header(zip_path, r["file"]), type_dict
-            )
-            for r in sched_files
+            f: make_colspec(read_zip_member_header(zip_path, f), type_dict)
+            for files in groups.values()
+            for f in files
         }
-        batch_stats = (
-            zip_stats_batch(spark, zip_path, colspecs) if colspecs else {}
-        )
+        if not colspecs:
+            return [], []
+        lines = zip_lines(
+            spark, zip_path, {f: (2, len(spec)) for f, spec in colspecs.items()}
+        ).cache()
 
-    def run_group(schedule: str, d, rows) -> tuple[dict | None, dict]:
+    def run_group(schedule: str, d, files) -> tuple[dict | None, dict]:
         """One (schedule, date) group -> (wide output | None, log row)."""
-        val = validation.get((schedule, d), {})
-        if val.get("errors"):
-            return None, {
-                "zipfile": zip_path,
-                "schedule": schedule,
-                "date": d,
-                "kind": "schedule",
-                "ok": False,
-                "repairs": list(val["errors"]),
-                "inner_files": [r["file"] for r in rows],
-            }
-        parts, repairs, all_ok, releases = [], [], True, []
-        n_problems = 0
+        log = {
+            "zipfile": zip_path,
+            "schedule": schedule,
+            "date": d,
+            "kind": "schedule",
+            "inner_files": list(files),
+        }
+        errors = validation[(schedule, d)]["errors"]
+        if errors:
+            return None, {**log, "ok": False, "repairs": list(errors)}
         with clock.stage("parse_repair"):
-            for r in rows:
-                df, audit = read_call_schedule(
-                    spark, zip_path, r["file"], type_dict,
-                    precomputed_stats=batch_stats.get(r["file"]),
-                )
-                parts.append(df)
-                repairs.extend(audit["repairs"])
-                all_ok = all_ok and audit["ok"]
-                n_problems += audit["n_problems"]
-                releases.append(audit["unpersist"])
+            member_lines = {f: lines.filter(F.col("member") == f) for f in files}
+            flags = [audits.get(f, (False, 0)) for f in files]
+            repaired = any(rep for rep, _ in flags)
+            all_ok = not any(n_bad for _, n_bad in flags)
         if strict and not all_ok:
             # clean-read gate (reference ffiec_finalize_if_clean,
             # R/ffeic_read.R:654-685): an unrepairable member blocks the
             # whole (schedule, date) output; the failure is logged, not
-            # silently partial
-            for release in releases:
-                release()
+            # silently partial.  Nothing is written, so the problem count
+            # cannot ride a write: it costs a member_stats job per part
+            n_problems = sum(
+                member_stats(member_lines[f], colspecs[f])[1] for f in files
+            )
             return None, {
-                "zipfile": zip_path,
-                "schedule": schedule,
-                "date": d,
-                "kind": "schedule",
+                **log,
                 "ok": False,
-                "repairs": sorted({*repairs, "unrepairable"}),
+                "repairs": sorted(
+                    {*repair_tags(repaired, n_problems), "unrepairable"}
+                ),
                 "n_problems": n_problems,
-                "inner_files": [r["file"] for r in rows],
             }
+        with clock.stage("parse_repair"):
+            parts, counters = [], []
+            for f in files:
+                df, n_problems = parse_observed(member_lines[f], colspecs[f])
+                parts.append(df)
+                # a member without data lines is absent from the audit;
+                # its empty join branch may be pruned and never report
+                if f in audits:
+                    counters.append(n_problems)
         with clock.stage("combine_write_wide"):
             wide = combine_parts(parts, keys=["IDRSSD"])
             wide = wide.withColumn("date", F.lit(d).cast("date"))
@@ -245,46 +251,45 @@ def process_zip_schedules(
                 if os.path.exists(out_path):
                     os.remove(out_path)
                 raise
-            finally:
-                for release in releases:
-                    release()
+            n_problems = sum(n() for n in counters)
         output = {
             "schedule": schedule, "date": d, "path": out_path,
-            "inner_files": [r["file"] for r in rows],
+            "inner_files": list(files),
         }
         return output, {
-            "zipfile": zip_path,
-            "schedule": schedule,
-            "date": d,
-            "kind": "schedule",
+            **log,
             "ok": True,
-            "repairs": sorted(set(repairs)),
+            "repairs": repair_tags(repaired, n_problems),
             "n_problems": n_problems,
-            "inner_files": [r["file"] for r in rows],
         }
 
-    # Per-group jobs are independent (distinct output files, no shared
-    # state), and each is many small Spark jobs on small inputs — so
-    # submit them from a thread pool and let Spark's FIFO scheduler
-    # interleave their stages across idle cores (the reference itself
-    # fans out per zip, R/ffiec_process.R:545-571).  Results are folded
-    # back in deterministic (schedule, date) order regardless of
-    # completion order.
-    ordered = sorted(groups.items())
-    n_workers = min(
-        int(os.environ.get("FFIEC_ETL_PARALLELISM", "4")), max(len(ordered), 1)
-    )
-    outputs, log_rows = [], []
-    if n_workers <= 1 or len(ordered) <= 1:
-        results = [run_group(s, d, rows) for (s, d), rows in ordered]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
+    try:
+        with clock.stage("audit_batch"):
+            audits = member_audit(lines)
+        # Per-group jobs are independent (distinct output files, no shared
+        # state), and each is many small Spark jobs on small inputs — so
+        # submit them from a thread pool and let Spark's FIFO scheduler
+        # interleave their stages across idle cores (the reference itself
+        # fans out per zip, R/ffiec_process.R:545-571).  Results are folded
+        # back in deterministic (schedule, date) order regardless of
+        # completion order.
+        ordered = sorted(groups.items())
+        n_workers = min(
+            int(os.environ.get("FFIEC_ETL_PARALLELISM", "4")), max(len(ordered), 1)
+        )
+        if n_workers <= 1 or len(ordered) <= 1:
+            results = [run_group(s, d, files) for (s, d), files in ordered]
+        else:
+            from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=n_workers) as pool:
-            futures = [
-                pool.submit(run_group, s, d, rows) for (s, d), rows in ordered
-            ]
-            results = [f.result() for f in futures]
+            with ThreadPoolExecutor(max_workers=n_workers) as pool:
+                futures = [
+                    pool.submit(run_group, s, d, files) for (s, d), files in ordered
+                ]
+                results = [f.result() for f in futures]
+    finally:
+        lines.unpersist()
+    outputs, log_rows = [], []
     for output, log_row in results:
         if output is not None:
             outputs.append(output)
@@ -416,18 +421,16 @@ def make_schedule_pq(
     (reference make_schedule_pq, R/ffiec_make_long_pqs.R:119-127)."""
     from ffiec_pq_spark.sources.parquet import pq_cols
 
-    rows = []
+    schedules: dict[str, set] = {}
+    dates: dict[str, set] = {}
     for out in wide_outputs:
         for c in pq_cols(out["path"]):
             if c not in ("IDRSSD", "date"):
-                rows.append((c, out["schedule"], out["date"]))
-    df = (
-        spark.createDataFrame(rows, "item string, schedule string, date date")
-        .groupBy("item")
-        .agg(
-            F.sort_array(F.collect_set("schedule")).alias("schedule"),
-            F.sort_array(F.collect_set("date")).alias("dates"),
-        )
+                schedules.setdefault(c, set()).add(out["schedule"])
+                dates.setdefault(c, set()).add(out["date"])
+    df = spark.createDataFrame(
+        [(c, sorted(schedules[c]), sorted(dates[c])) for c in sorted(schedules)],
+        "item string, schedule array<string>, dates array<date>",
     )
     path = os.path.join(out_dir, "ffiec_item_schedules.parquet")
     write_single_parquet(df, path)
@@ -438,8 +441,7 @@ def process_zip_por(
     spark: SparkSession, zip_path: str, out_dir: str
 ) -> tuple[str | None, list[dict]]:
     """Stage 4: POR member -> institution parquet."""
-    manifest = zip_member_manifest(spark, [zip_path])
-    por_rows = manifest.filter(F.col("schedule") == "por").collect()
+    por_rows = [r for r in member_rows(zip_path) if r["schedule"] == "por"]
     if not por_rows:
         return None, []
     r = por_rows[0]

@@ -102,10 +102,6 @@ def ensure_session_confs(spark: SparkSession) -> None:
         pass  # conf API unavailable (mocked sessions in unit tests)
 
 
-# backward-compat alias (prior name)
-ensure_nanos_conf = ensure_session_confs
-
-
 # Partition-count probe memo for spread(), keyed on (applicationId,
 # analyzed-plan semanticHash): the probe itself (`df.rdd`) runs FULL
 # physical planning on a fresh plan — measured ~80-120 ms of driver

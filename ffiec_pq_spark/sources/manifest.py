@@ -8,11 +8,11 @@ Reference behaviors re-expressed:
   ``schedule``, ``date``, ``part``, ``n_parts`` from inner filenames
   (reference get_cr_files, R/ffiec_manifest.R:130-144).
 
-Both manifests are *small* (hundreds of rows) — they are built with
-driver-side Python and returned as DataFrames so downstream plan logic
-(filters, joins with the process log) is uniform.  At scale the zip
-listing stays trivially small; member listing reads only the zip central
-directory (no decompression).
+Both manifests are *small* (hundreds of rows), so they and the
+multipart validation are plain driver-side Python (``member_rows``,
+``validate_parts``): the ETL runs no Spark job for them.  The
+DataFrame functions are thin wrappers over the same code.  Member
+listing reads only the zip central directory (no decompression).
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from datetime import datetime
 from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 BULK_ZIP_RE = re.compile(
@@ -42,6 +41,18 @@ _ZIP_SCHEMA = T.StructType(
         T.StructField("zipfile", T.StringType(), False),
         T.StructField("kind", T.StringType(), False),
         T.StructField("date", T.DateType(), True),
+    ]
+)
+
+_VALIDATION_SCHEMA = T.StructType(
+    [
+        T.StructField("zipfile", T.StringType(), False),
+        T.StructField("schedule", T.StringType(), True),
+        T.StructField("date", T.DateType(), True),
+        T.StructField("claimed", T.LongType(), True),
+        T.StructField("found_parts", T.LongType(), False),
+        T.StructField("parts", T.ArrayType(T.IntegerType(), False), False),
+        T.StructField("errors", T.ArrayType(T.StringType(), False), False),
     ]
 )
 
@@ -74,66 +85,85 @@ def list_bulk_zips(spark: SparkSession, raw_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, _ZIP_SCHEMA).orderBy("date", "zipfile")
 
 
+def member_rows(zip_path: str) -> list[dict]:
+    """Member manifest of one zip as plain rows: ``file``, ``schedule``,
+    ``date``, ``part``, ``n_parts`` (reference get_cr_files,
+    R/ffiec_manifest.R:130-144).  Reads only the central directory."""
+    rows = []
+    with zipfile.ZipFile(zip_path) as zf:
+        for name in zf.namelist():
+            m = MEMBER_RE.search(name)
+            if not m:
+                rows.append(dict(file=name, schedule=None, date=None,
+                                 part=None, n_parts=None))
+                continue
+            sched = m.group("schedule")
+            rows.append(dict(
+                file=name,
+                schedule=sched.lower() if sched else ("por" if m.group("por") else None),
+                date=_parse_mmddyyyy(m.group("date")),
+                part=int(m.group("part")) if m.group("part") else None,
+                n_parts=int(m.group("n_parts")) if m.group("n_parts") else None,
+            ))
+    return rows
+
+
+def validate_parts(rows: list[dict]) -> dict[tuple, dict]:
+    """Multipart validation (reference resolve_n_parts,
+    R/ffiec_process.R:106-130) over the schedule rows of a manifest:
+    per (schedule, date) compare the claimed part count with the parts
+    found and flag missing, duplicate or non-contiguous part numbers.
+    Returns ``{(schedule, date): {claimed, found_parts, parts, errors}}``
+    with ``errors`` empty for a valid group."""
+    groups: dict[tuple, list[dict]] = {}
+    for r in rows:
+        if r["schedule"] is not None and r["schedule"] != "por":
+            groups.setdefault((r["schedule"], r["date"]), []).append(r)
+    out = {}
+    for key, members in groups.items():
+        found = len(members)
+        claims = [r["n_parts"] for r in members if r["n_parts"] is not None]
+        claimed = max(claims) if claims else found
+        parts = sorted(r["part"] for r in members if r["part"] is not None)
+        errors = []
+        # an unpartitioned single file has no part numbers and is valid
+        # iff exactly one file was found
+        if parts and found != claimed:
+            errors.append("count-mismatch")
+        if len(parts) != len(set(parts)):
+            errors.append("duplicate-parts")
+        if parts and parts != list(range(1, claimed + 1)):
+            errors.append("non-contiguous")
+        if not parts and found != 1:
+            errors.append("count-mismatch")
+        out[key] = dict(claimed=claimed, found_parts=found, parts=parts,
+                        errors=errors)
+    return out
+
+
 def zip_member_manifest(spark: SparkSession, zip_paths: list[str]) -> DataFrame:
     """Member manifest for each zip -> (zipfile, file, schedule, date,
-    part, n_parts).  Reads only the central directory."""
-    rows = []
-    for zp in zip_paths:
-        with zipfile.ZipFile(zp) as zf:
-            for name in zf.namelist():
-                m = MEMBER_RE.search(name)
-                if not m:
-                    rows.append((zp, name, None, None, None, None))
-                    continue
-                sched = m.group("schedule")
-                rows.append(
-                    (
-                        zp,
-                        name,
-                        sched.lower() if sched else ("por" if m.group("por") else None),
-                        _parse_mmddyyyy(m.group("date")),
-                        int(m.group("part")) if m.group("part") else None,
-                        int(m.group("n_parts")) if m.group("n_parts") else None,
-                    )
-                )
-    return spark.createDataFrame(rows, _MEMBER_SCHEMA)
+    part, n_parts): :func:`member_rows` as a DataFrame."""
+    return spark.createDataFrame(
+        [
+            (zp, r["file"], r["schedule"], r["date"], r["part"], r["n_parts"])
+            for zp in zip_paths
+            for r in member_rows(zp)
+        ],
+        _MEMBER_SCHEMA,
+    )
 
 
 def resolve_n_parts(manifest: DataFrame) -> DataFrame:
-    """Multipart validation (reference resolve_n_parts,
-    R/ffiec_process.R:106-130): per (zipfile, schedule, date) compare
-    claimed part count vs found parts; flag missing/duplicate/
-    non-contiguous part numbers.  Returns one row per group with an
-    ``errors`` array (empty = valid)."""
-    grouped = (
-        manifest.filter(F.col("schedule").isNotNull() & (F.col("schedule") != "por"))
-        .groupBy("zipfile", "schedule", "date")
-        .agg(
-            F.max("n_parts").alias("claimed_parts"),
-            F.count(F.lit(1)).alias("found_parts"),
-            F.sort_array(F.collect_list("part")).alias("parts"),
-        )
-        .withColumn(
-            "claimed", F.coalesce(F.col("claimed_parts"), F.col("found_parts"))
-        )
-    )
-    # collect_list drops NULLs: an unpartitioned single file yields an
-    # empty parts array and is valid iff exactly one file was found
-    unpartitioned = F.size("parts") == 0
-    dup = F.size("parts") != F.size(F.array_distinct("parts"))
-    contiguous = F.col("parts") == F.sequence(F.lit(1), F.col("claimed"))
-    return grouped.withColumn(
-        "errors",
-        F.filter(
-            F.array(
-                F.when(
-                    ~unpartitioned & (F.col("found_parts") != F.col("claimed")),
-                    "count-mismatch",
-                ),
-                F.when(dup, "duplicate-parts"),
-                F.when(~unpartitioned & ~contiguous, "non-contiguous"),
-                F.when(unpartitioned & (F.col("found_parts") != 1), "count-mismatch"),
-            ),
-            lambda x: x.isNotNull(),
-        ),
-    ).select("zipfile", "schedule", "date", "claimed", "found_parts", "parts", "errors")
+    """:func:`validate_parts` per zipfile of a manifest DataFrame -> one
+    row per (zipfile, schedule, date) with ``claimed``, ``found_parts``,
+    ``parts`` and an ``errors`` array (empty = valid)."""
+    by_zip: dict[str, list[dict]] = {}
+    for r in manifest.collect():
+        by_zip.setdefault(r["zipfile"], []).append(r.asDict())
+    out = [
+        (zp, s, d, v["claimed"], v["found_parts"], v["parts"], v["errors"])
+        for zp, rows in sorted(by_zip.items())
+        for (s, d), v in validate_parts(rows).items()
+    ]
+    return manifest.sparkSession.createDataFrame(out, _VALIDATION_SCHEMA)

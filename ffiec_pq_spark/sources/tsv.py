@@ -2,9 +2,12 @@
 -row repair (SURVEY.md §2.1 S3/S4; reference read_call_from_zip
 R/ffeic_read.R:34-119 and read_tsv_with_tab_repair :194-250).
 
-Spark has no native "read member X of a zip" source, so member bytes are
-extracted executor-side from a ``binaryFile`` scan of the zip and turned
-into a line DataFrame; everything after that is declarative:
+Spark has no native "read member X of a zip" source.  The read path is
+ONE ``binaryFile`` + ``mapInPandas`` pass per zip (:func:`zip_lines`):
+for every listed member it decompresses the member once, counts the
+lines with a wrong field count, repairs the text only when some line is
+bad, counts again, and emits ``(member, line_no, value, repaired,
+n_bad)``.  Everything after that is declarative:
 
 1. header row (line 1) -> column names; line 2 is a description row and
    is skipped (reference ``skip = 2``).
@@ -12,23 +15,26 @@ into a line DataFrame; everything after that is declarative:
    to build the typed colspec; unknown columns default to string;
    hard overrides (RCON8678 string, RCON9999/RIAD9106 date-parsed-later)
    mirror the reference (R/ffiec_types.R:30-35).
-3. fast path: split on tabs, project all-string, then typed casts with
-   the domain NULL tokens "" / "CONF".
-4. slow path (triggered per member when any line's field count is
-   wrong): re-extract with text-level repairs — (a) join embedded
-   newlines not preceded by a tab into the prior line
+3. parse: split on tabs, then typed casts with the domain NULL tokens
+   "" / "CONF".
+4. repair (inside the pass, per member with any wrong-field-count line):
+   (a) join embedded newlines not preceded by a tab into the prior line
    (regex ``(?<!\\t)\\n`` -> space), (b) convert tabs beyond
-   ``expected-1`` to spaces — then re-parse; repair tags are recorded
-   in the audit (reference R/ffeic_read.R:90-93,130-146).
+   ``expected-1`` to spaces; repair tags are recorded in the audit
+   (reference R/ffeic_read.R:90-93,130-146).
 
-The reader returns ``(DataFrame, audit_dict)`` — the reference carries
-diagnostics as R attributes (SURVEY.md §2.13); here the audit is an
-explicit value the process log aggregates.
+The audit is an explicit value the process log aggregates (the
+reference carries diagnostics as R attributes, SURVEY.md §2.13).  The
+type-parse problem count rides the consumer's own first action through
+``observe()`` (:func:`parse_observed`); :func:`member_stats` is the
+same count as its own job.
 
-Scale: one zip member = one Spark task's worth of text (quarterly files
-are ~10-100 MB); many members/zips process in parallel, so cluster
-parallelism comes from the number of files, exactly like the
-reference's per-zip worker fan-out but scheduled by Spark.
+Scale: a zip is one ``binaryFile`` row, so the pass is one task per zip
+that holds one member's text at a time (quarterly members are ~10-100
+MB).  Cluster parallelism comes from the number of zips, like the
+reference's per-zip worker fan-out, and from the per-member parses and
+joins downstream; ``sources/zip_datasource.py`` is the
+one-partition-per-member alternative.
 """
 
 from __future__ import annotations
@@ -36,14 +42,13 @@ from __future__ import annotations
 import io
 import re
 import zipfile
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ffiec_pq_spark.functions.scalars import parse_yyyymmdd
+from ffiec_pq_spark.functions.scalars import NA_DATE_TOKENS
 
 NA_TOKENS = ("", "CONF")
 
@@ -51,13 +56,7 @@ NA_TOKENS = ("", "CONF")
 # d=double, i=int, c=character, l=logical, D=date(yyyymmdd text)
 DEFAULT_OVERRIDES = {"RCON8678": "c", "RCON9999": "D", "RIAD9106": "D"}
 
-_SPARK_TYPES = {
-    "d": T.DoubleType(),
-    "i": T.IntegerType(),
-    "c": T.StringType(),
-    "l": T.BooleanType(),
-    "D": T.DateType(),
-}
+_SQL_TYPES = {"d": "double", "i": "int", "c": "string"}
 
 
 def make_colspec(
@@ -128,6 +127,99 @@ def repair_member_text(text: str, expected_cols: int) -> tuple[str, list[str]]:
     return "\n".join(fixed), tags
 
 
+# Java's non-multiline ``$`` matches at the end of the input and also
+# before one final line terminator; a line value never holds "\n"
+_JAVA_LINE_END = ("\r", "\x85", "\u2028", "\u2029")
+
+
+def n_fields(value: str) -> int:
+    """Field count of one line exactly as Spark computes
+    ``size(split(regexp_replace(value, "\\t$", ""), "\\t", -1))``: the
+    trailing delimiter tab is dropped also when one final Java line
+    terminator follows it."""
+    trailing = value.endswith("\t") or (
+        value[-2:-1] == "\t" and value[-1:] in _JAVA_LINE_END
+    )
+    return value.count("\t") + 1 - trailing
+
+
+def _split_lines(text: str) -> list[str]:
+    lines = text.split("\n")
+    if lines and lines[-1] == "":
+        lines.pop()
+    return [ln.rstrip("\r") for ln in lines]
+
+
+def zip_lines(
+    spark: SparkSession,
+    zip_path: str,
+    members: dict[str, tuple[int, int | None]],
+) -> DataFrame:
+    """The read pass: every listed member of one zip, decompressed once,
+    as (member, line_no, value, repaired, n_bad) rows.
+
+    ``members`` maps a member name to ``(skip, expected_cols)``.  The
+    first ``skip`` lines are dropped (``line_no`` stays 1-based over the
+    whole member).  With ``expected_cols`` set, ``n_bad`` counts the
+    data lines whose :func:`n_fields` differs from it; a member with any
+    such line is rebuilt with :func:`repair_member_text`
+    (``repaired``) and ``n_bad`` is its count after the repair.  With
+    ``expected_cols=None`` (the POR) lines pass unchecked.  Every row
+    of a member carries the same ``repaired`` and ``n_bad``; a member
+    without data lines has no rows."""
+    specs = dict(members)
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for content in pdf["content"]:
+                with zipfile.ZipFile(io.BytesIO(content)) as zf:
+                    for member, (skip, n_cols) in specs.items():
+                        text = zf.read(member).decode("utf-8", errors="replace")
+                        lines = _split_lines(text)
+                        repaired, n_bad = False, 0
+                        if n_cols is not None:
+                            n_bad = sum(n_fields(v) != n_cols for v in lines[skip:])
+                            if n_bad:
+                                text, _ = repair_member_text(text, n_cols)
+                                lines = _split_lines(text)
+                                repaired = True
+                                n_bad = sum(
+                                    n_fields(v) != n_cols for v in lines[skip:]
+                                )
+                        if len(lines) > skip:
+                            yield pd.DataFrame(
+                                {
+                                    "member": member,
+                                    "line_no": range(skip + 1, len(lines) + 1),
+                                    "value": lines[skip:],
+                                    "repaired": repaired,
+                                    "n_bad": n_bad,
+                                }
+                            )
+
+    return (
+        spark.read.format("binaryFile")
+        .load(zip_path)
+        .select("content")
+        .mapInPandas(
+            extract,
+            schema="member string, line_no long, value string, "
+            "repaired boolean, n_bad long",
+        )
+    )
+
+
+def member_audit(lines: DataFrame) -> dict[str, tuple[bool, int]]:
+    """``{member: (repaired, n_bad)}`` of a :func:`zip_lines` frame in
+    one small aggregate; members without data lines are absent."""
+    rows = (
+        lines.groupBy("member")
+        .agg(F.max("repaired").alias("repaired"), F.max("n_bad").alias("n_bad"))
+        .collect()
+    )
+    return {r["member"]: (r["repaired"], r["n_bad"]) for r in rows}
+
+
 def zip_member_lines(
     spark: SparkSession,
     zip_path: str,
@@ -135,213 +227,135 @@ def zip_member_lines(
     skip: int = 2,
     repair_expected_cols: int | None = None,
 ) -> DataFrame:
-    """Executor-side extraction of one zip member into a line DataFrame
-    (line_no, value).  When ``repair_expected_cols`` is set the slow-path
-    text repairs run before line splitting."""
-    bin_df = spark.read.format("binaryFile").load(zip_path)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                with zipfile.ZipFile(io.BytesIO(row["content"])) as zf:
-                    text = zf.read(member).decode("utf-8", errors="replace")
-                if repair_expected_cols is not None:
-                    text, _ = repair_member_text(text, repair_expected_cols)
-                lines = text.split("\n")
-                if lines and lines[-1] == "":
-                    lines.pop()
-                yield pd.DataFrame(
-                    {
-                        "line_no": range(1, len(lines) + 1),
-                        "value": [ln.rstrip("\r") for ln in lines],
-                    }
-                )
-
-    lines_df = bin_df.select("content").mapInPandas(
-        extract, schema="line_no long, value string"
-    )
-    return lines_df.filter(F.col("line_no") > skip)
+    """One member's (line_no, value) lines: :func:`zip_lines` over that
+    member alone.  With ``repair_expected_cols`` set, a member with a
+    wrong-field-count line is repaired first."""
+    return zip_lines(
+        spark, zip_path, {member: (skip, repair_expected_cols)}
+    ).select("line_no", "value")
 
 
-def _typed_cast(raw: F.Column, tchar: str) -> F.Column:
-    cleaned = F.when(F.trim(raw).isin(*NA_TOKENS), F.lit(None)).otherwise(F.trim(raw))
+# The per-column expressions below are SQL text, not Column-API
+# builders: a schedule has tens to hundreds of columns, and building
+# each one through py4j costs ~20 driver round trips a column (about
+# 0.1 s of driver time per 9-column part, measured at local[4] on
+# PySpark 4.1), while ``selectExpr`` / ``expr`` ship the whole
+# projection in one call.
+
+
+def _sql_in(tokens) -> str:
+    return ", ".join(f"'{t}'" for t in tokens)
+
+
+def _cleaned(i: int) -> str:
+    """SQL: field ``i`` of the split array ``f``, trimmed, with the
+    domain NULL tokens "" / "CONF" as NULL (NULL on short rows too)."""
+    raw = f"trim(get(f, {i}))"
+    return f"CASE WHEN {raw} IN ({_sql_in(NA_TOKENS)}) THEN NULL ELSE {raw} END"
+
+
+def _typed_sql(i: int, tchar: str) -> str:
+    """SQL: field ``i`` parsed as ``tchar``; an unparsable value is NULL."""
+    c = _cleaned(i)
     if tchar == "D":
-        return parse_yyyymmdd(cleaned)
+        # YYYYMMDD text with the date NA tokens (parse_yyyymmdd)
+        return (
+            f"CAST(try_to_timestamp(CASE WHEN trim({c}) IN "
+            f"({_sql_in(NA_DATE_TOKENS)}) THEN NULL ELSE trim({c}) END, "
+            f"'yyyyMMdd') AS DATE)"
+        )
     if tchar == "l":
-        return F.when(F.lower(cleaned).isin("true", "1"), F.lit(True)).when(
-            F.lower(cleaned).isin("false", "0"), F.lit(False)
+        return (
+            f"CASE WHEN lower({c}) IN ('true', '1') THEN true "
+            f"WHEN lower({c}) IN ('false', '0') THEN false END"
         )
     # try_cast, not cast: Spark 4 runs ANSI mode, where a malformed
     # numeric throws; the reference's readr semantics are NULL + a
     # recorded problem (counted by member_stats)
-    return cleaned.try_cast(_SPARK_TYPES[tchar])
+    return f"try_cast({c} AS {_SQL_TYPES[tchar]})"
+
+
+def _fields(lines: DataFrame) -> DataFrame:
+    """Each line's tab-split field array ``f``, projected once so the
+    per-column expressions downstream do not re-run the regex split."""
+    return lines.select(
+        F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1).alias("f")
+    )
+
+
+def _typed(fields: DataFrame, colspec: list[tuple[str, str]]) -> DataFrame:
+    return fields.selectExpr(
+        *[
+            f"{_typed_sql(i, tchar)} AS `{name.replace('`', '``')}`"
+            for i, (name, tchar) in enumerate(colspec)
+        ]
+    )
+
+
+def _problem(colspec: list[tuple[str, str]]) -> F.Column:
+    """Per line of a :func:`_fields` frame: some typed (double/int/date)
+    field whose value fails its parse — the reference's 'problems'
+    capture (R/ffeic_read.R:257-310): the value becomes NULL and the
+    problem is counted.  NA tokens and the date sentinels "0" /
+    "00000000" are not problems."""
+    conds = []
+    for i, (_, tchar) in enumerate(colspec):
+        if tchar not in ("d", "i", "D"):
+            continue
+        c = _cleaned(i)
+        if tchar == "D":
+            c = f"CASE WHEN {c} IN ('0', '00000000') THEN NULL ELSE {c} END"
+        conds.append(f"({c} IS NOT NULL AND {_typed_sql(i, tchar)} IS NULL)")
+    return F.expr(" OR ".join(conds) or "false")
 
 
 def parse_schedule_lines(
     lines: DataFrame, colspec: list[tuple[str, str]]
 ) -> DataFrame:
     """Tab-split -> typed projection with NULL-token semantics."""
-    fields = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
-    # F.get (not fields[i]): NULL on short rows instead of the ANSI
-    # out-of-bounds error — lenient mode must parse what it can
-    cols = [
-        _typed_cast(F.trim(F.get(fields, i)).alias(name), tchar).alias(name)
-        for i, (name, tchar) in enumerate(colspec)
-    ]
-    return lines.select(*cols)
+    return _typed(_fields(lines), colspec)
+
+
+def parse_observed(
+    lines: DataFrame, colspec: list[tuple[str, str]]
+) -> tuple[DataFrame, Callable[[], int]]:
+    """:func:`parse_schedule_lines` whose problem count (the
+    :func:`member_stats` definition) rides the frame's first action via
+    ``observe()``.  Returns ``(typed_df, n_problems)``; call
+    ``n_problems()`` only after that action has run, and not for a frame
+    without rows (a join may prune its empty branch, which then never
+    reports)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    fields = _fields(lines).observe(
+        obs, F.sum(_problem(colspec).cast("long")).alias("n")
+    )
+    return _typed(fields, colspec), lambda: int(obs.get["n"] or 0)
 
 
 def member_stats(
     lines: DataFrame, colspec: list[tuple[str, str]]
 ) -> tuple[int, int]:
-    """(n_bad_lines, n_problem_rows) in ONE aggregate pass.
+    """(n_bad_lines, n_problem_rows) in ONE aggregate job.
 
-    n_bad_lines: wrong tab-field count (the repair-slow-path trigger).
-    n_problem_rows: a typed (double/int/date) field whose value fails
-    its parse — the reference's 'problems' capture (R/ffeic_read.R:
-    257-310): value becomes NULL, problem is counted.
-
-    The tab-split array is PROJECTED once per row before the per-column
-    conditions: referencing the split expression inside each of ~2xN
-    conditions would re-run the regex split per condition (no CSE
-    across that many branches)."""
-    n = len(colspec)
-    split_expr = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
-    proj = lines.select(split_expr.alias("f"))
-    conds = []
-    for i, (name, tchar) in enumerate(colspec):
-        if tchar not in ("d", "i", "D"):
-            continue
-        raw = F.trim(F.get(F.col("f"), i))
-        cleaned = F.when(raw.isin(*NA_TOKENS), F.lit(None)).otherwise(raw)
-        if tchar == "D":
-            cleaned = F.when(
-                cleaned.isin("0", "00000000"), F.lit(None)
-            ).otherwise(cleaned)
-        typed = _typed_cast(raw, tchar)
-        conds.append(cleaned.isNotNull() & typed.isNull())
-    problem = conds[0] if conds else F.lit(False)
-    for c in conds[1:]:
-        problem = problem | c
-    row = proj.agg(
-        F.sum((F.size("f") != n).cast("long")).alias("bad"),
-        F.sum(problem.cast("long")).alias("problems"),
+    n_bad_lines: wrong tab-field count (the repair trigger).
+    n_problem_rows: lines with a type-parse problem (:func:`_problem`)."""
+    row = _fields(lines).agg(
+        F.sum((F.size("f") != len(colspec)).cast("long")).alias("bad"),
+        F.sum(_problem(colspec).cast("long")).alias("problems"),
     ).collect()[0]
     return int(row["bad"] or 0), int(row["problems"] or 0)
 
 
-def zip_stats_batch(
-    spark: SparkSession,
-    zip_path: str,
-    colspecs: dict[str, list[tuple[str, str]]],
-    skip: int = 2,
-) -> dict[str, tuple[int, int]]:
-    """(n_bad_lines, n_problem_rows) for EVERY listed member of one zip
-    in a single Spark job.
-
-    The per-member :func:`member_stats` runs one ``collect`` per member
-    (two when the repair path re-checks) on a sequentially-extracted
-    line frame — at 100k members the job-scheduling overhead dominates
-    the audit.  Here one ``binaryFile`` pass extracts all members'
-    lines tagged with the member name, the per-member column specs ride
-    in as a broadcast (member, idx, type) dimension, and both counters
-    reduce map-side: posexplode fans each line out to its fields, the
-    typed-parse check joins its type char, and partial aggregation
-    collapses back to line granularity before the (member, line) ->
-    member shuffle.  Semantics are identical to :func:`member_stats`
-    (same NA tokens, same date-sentinel handling, same try_cast
-    lenience) — pinned by a fixture parity test.
-
-    The extracted line frame is ``spread`` before the field fan-out:
-    one zip = one ``binaryFile`` row = ONE task, and without the
-    redistribution every per-field split/try_cast of every member ran
-    single-threaded inside the extraction task — the round-12 stage
-    breakdown measured the audit as the ingest's top stage (6.6 s of
-    23.7 s at 10k banks) with 31 idle cores.  Spreading the
-    ~line-count rows costs one small exchange and parallelizes the
-    field work; the win grows with zip size exactly as a serial
-    bottleneck should: measured warm 4.3 s vs 16.5 s without the
-    spread at 80k banks (8x), and the extraction itself is 0.4 s, so
-    the residual is the distributed field pass."""
-    bin_df = spark.read.format("binaryFile").load(zip_path)
-    members = sorted(colspecs)
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                with zipfile.ZipFile(io.BytesIO(row["content"])) as zf:
-                    for m in members:
-                        text = zf.read(m).decode("utf-8", errors="replace")
-                        lines = text.split("\n")
-                        if lines and lines[-1] == "":
-                            lines.pop()
-                        lines = [ln.rstrip("\r") for ln in lines[skip:]]
-                        yield pd.DataFrame(
-                            {
-                                "member": m,
-                                "line_no": range(1, len(lines) + 1),
-                                "value": lines,
-                            }
-                        )
-
-    from ffiec_pq_spark.session import spread
-
-    lines_all = spread(
-        bin_df.select("content").mapInPandas(
-            extract, schema="member string, line_no long, value string"
-        )
-    )
-    spec_rows = [
-        (m, i, tchar)
-        for m, spec in colspecs.items()
-        for i, (_, tchar) in enumerate(spec)
-        if tchar in ("d", "i", "D")
-    ]
-    spec_df = spark.createDataFrame(
-        spec_rows or [("", -1, "c")], "member string, idx int, tchar string"
-    )
-    n_df = spark.createDataFrame(
-        [(m, len(spec)) for m, spec in colspecs.items()],
-        "member string, n_cols int",
-    )
-    fields = F.split(F.regexp_replace(F.col("value"), "\t$", ""), "\t", -1)
-    per_field = lines_all.select(
-        "member", "line_no", F.size(fields).alias("nf"),
-        F.posexplode_outer(fields).alias("idx", "raw"),
-    ).join(F.broadcast(spec_df), ["member", "idx"], "left")
-    raw = F.trim(F.col("raw"))
-    na_cleaned = F.when(raw.isin(*NA_TOKENS), F.lit(None)).otherwise(raw)
-    d_cleaned = F.when(
-        (F.col("tchar") == "D") & na_cleaned.isin("0", "00000000"),
-        F.lit(None),
-    ).otherwise(na_cleaned)
-    typed_null = (
-        F.when(F.col("tchar") == "d", na_cleaned.try_cast("double").isNull())
-        .when(F.col("tchar") == "i", na_cleaned.try_cast("int").isNull())
-        .when(F.col("tchar") == "D", parse_yyyymmdd(na_cleaned).isNull())
-        .otherwise(F.lit(False))
-    )
-    fail = (
-        F.col("tchar").isNotNull()
-        & d_cleaned.isNotNull()
-        & typed_null
-    ).cast("long")
-    per_line = per_field.groupBy("member", "line_no").agg(
-        F.max(fail).alias("any_fail"), F.first("nf").alias("nf")
-    )
-    per_member = (
-        per_line.join(F.broadcast(n_df), "member")
-        .groupBy("member")
-        .agg(
-            F.sum((F.col("nf") != F.col("n_cols")).cast("long")).alias("bad"),
-            F.sum("any_fail").alias("problems"),
-        )
-        .collect()
-    )
-    out = {m: (0, 0) for m in members}  # empty members produce no rows
-    for r in per_member:
-        out[r["member"]] = (int(r["bad"] or 0), int(r["problems"] or 0))
-    return out
+def repair_tags(repaired: bool, n_problems: int) -> list[str]:
+    """A member's sorted audit tags: the two text repairs when the read
+    pass repaired it, ``coerced-invalid-values`` when a typed value
+    failed its parse."""
+    tags = ["newline-gsub", "tab-repair"] if repaired else []
+    if n_problems:
+        tags.append("coerced-invalid-values")
+    return sorted(tags)
 
 
 def read_call_schedule(
@@ -350,52 +364,22 @@ def read_call_schedule(
     member: str,
     type_dict: dict[str, str],
     overrides: dict[str, str] | None = None,
-    precomputed_stats: tuple[int, int] | None = None,
 ) -> tuple[DataFrame, dict]:
-    """Read one schedule TSV member -> (typed DataFrame, audit).
-
-    Two-phase: strict parse first; on any bad-field-count line, re-read
-    with text repairs (the reference's exact strategy).
-
-    ``precomputed_stats``: the (n_bad, n_problems) pair from
-    :func:`zip_stats_batch` — passing it removes this member's own
-    stats job, so a clean member costs no Spark job until the terminal
-    write (the audit rode the whole-zip batch pass).
-
-    The extracted line DataFrame is CACHED on the repair path (the
-    re-check and the downstream parse would otherwise each
-    re-decompress the member); the clean path is consumed exactly once
-    by the write, so it stays uncached.  The caller releases via
-    ``audit['unpersist']()`` once the wide output is written."""
-    header = read_zip_member_header(zip_path, member)
-    colspec = make_colspec(header, type_dict, overrides)
-    n = len(colspec)
-    audit: dict = {"zipfile": zip_path, "file": member, "repairs": [], "ok": True}
-
-    if precomputed_stats is not None:
-        n_bad, n_problems = precomputed_stats
-        lines = zip_member_lines(spark, zip_path, member, skip=2)
-        if not n_bad:
-            # clean fast path: single downstream consumer, no cache
-            audit["n_problems"] = n_problems
-            if n_problems:
-                audit["repairs"] = ["coerced-invalid-values"]
-            audit["unpersist"] = lambda: None
-            return parse_schedule_lines(lines, colspec), audit
-    else:
-        lines = zip_member_lines(spark, zip_path, member, skip=2).cache()
-        n_bad, n_problems = member_stats(lines, colspec)
-    if n_bad:
-        lines.unpersist()
-        lines = zip_member_lines(
-            spark, zip_path, member, skip=2, repair_expected_cols=n
-        ).cache()
-        audit["repairs"] = ["newline-gsub", "tab-repair"]
-        n_bad, n_problems = member_stats(lines, colspec)
-        if n_bad:
-            audit["ok"] = False
-    audit["n_problems"] = n_problems
-    if n_problems:
-        audit["repairs"] = sorted({*audit["repairs"], "coerced-invalid-values"})
-    audit["unpersist"] = lines.unpersist
+    """Read one schedule TSV member -> (typed DataFrame, audit): the
+    :func:`zip_lines` pass over this member alone (repaired there when
+    a line has the wrong field count), cached for the audit jobs and
+    the caller's parse.  The caller releases the cache via
+    ``audit['unpersist']()``."""
+    colspec = make_colspec(read_zip_member_header(zip_path, member), type_dict, overrides)
+    lines = zip_lines(spark, zip_path, {member: (2, len(colspec))}).cache()
+    repaired, n_bad = member_audit(lines).get(member, (False, 0))
+    _, n_problems = member_stats(lines, colspec)
+    audit = {
+        "zipfile": zip_path,
+        "file": member,
+        "repairs": repair_tags(repaired, n_problems),
+        "ok": not n_bad,
+        "n_problems": n_problems,
+        "unpersist": lines.unpersist,
+    }
     return parse_schedule_lines(lines, colspec), audit

@@ -21,9 +21,9 @@ Usage::
           .load())
     # -> (member string, line_no bigint, line string)
 
-The raw-line output plugs into the existing two-phase repair parser
-(sources/tsv.py) unchanged; a parity test pins it against the direct
-``zipfile`` read.
+The raw-line output plugs into the typed parser
+(sources/tsv.py ``parse_schedule_lines``) unchanged; parity tests pin
+it against the direct ``zipfile`` read and the ETL's own read pass.
 """
 
 from __future__ import annotations

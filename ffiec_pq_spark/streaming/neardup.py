@@ -204,7 +204,7 @@ def run_neardup_bounded_stream(
 
     - map side, zero shuffle: each arriving doc's MinHash signature as
       one projection (``minhash_sig_expr``) + its 8 (band, bkey) rows
-      (``lsh_band_structs`` explode);
+      (``lsh_bands``);
     - ONE keyed exchange: groupBy(band, bkey) -> batch-min doc id +
       last event time, vectorized in ``foreachBatch``;
     - EMIT: each band row whose id exceeds least(state min, batch min)

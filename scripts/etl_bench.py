@@ -11,13 +11,24 @@ Usage: python scripts/etl_bench.py [n_banks] [n_items] [n_parts] [n_schedules]
 Prints one JSON line {"n_banks":..., "n_items":..., "cells":...,
 "ingest_sec":..., "cells_per_sec":..., "stage_sec": {...}}.
 
-``stage_sec`` breaks the ingest down by pipeline stage
-(manifest/validate, whole-zip audit, parse+repair, combine+wide
-write, POR, long build, schedule coverage, log write).  The per-group
-stages (parse_repair / combine_write_wide) run on the FIFO thread
-pool, so their seconds are summed THREAD-seconds and can exceed the
-wall clock — ``stage_sec`` locates the work, ``ingest_sec`` is the
-wall.
+``stage_sec`` breaks the ingest down by the eight stages
+``ffiec_process(clock=)`` reports:
+
+- ``manifest_validate``: member manifest + multipart validation
+  (driver-side Python, no Spark job);
+- ``audit_batch``: member headers, the one cached read pass over the
+  zip (decompress, count bad lines, repair) and its per-member audit
+  aggregate;
+- ``parse_repair``: building each part's typed, problem-observing plan
+  (no Spark job);
+- ``combine_write_wide``: multipart combine + wide parquet write (the
+  type-parse problem and pure-percent counts ride this write);
+- ``por``, ``long_build``, ``schedule_pq``, ``log_write``.
+
+The per-group stages (parse_repair / combine_write_wide) run on the
+FIFO thread pool, so their seconds are summed THREAD-seconds and can
+exceed the wall clock — ``stage_sec`` locates the work, ``ingest_sec``
+is the wall.
 
 The ingest runs TWICE in the process (fresh output dir each time):
 ``ingest_sec`` / ``stage_sec`` are the first run — what a fresh

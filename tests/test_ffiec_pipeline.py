@@ -3,6 +3,7 @@ manifest discovery, dictionary-typed TSV parse with repair, multipart
 combine, POR semantics, long-table build, XBRL extraction, process log."""
 
 import datetime
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +22,9 @@ from tests.ffiec_fixtures import (
     make_call_zip,
     make_xbrl_zip,
 )
+
+# Spark jobs of one ffiec_process call over the make_call_zip fixture
+INGEST_JOBS = 17
 
 
 @pytest.fixture(scope="module")
@@ -59,6 +63,40 @@ def test_member_manifest(spark, raw_dir):
     # multipart validation: all groups valid on this fixture
     v = resolve_n_parts(m).collect()
     assert all(len(r["errors"]) == 0 for r in v)
+
+
+def test_multipart_validation_errors(spark, tmp_path):
+    """Each multipart defect gets its own error: a claimed part that is
+    missing, a duplicated part number, and two unpartitioned files for
+    one (schedule, date); complete groups and a single unpartitioned
+    file are valid."""
+    import zipfile
+
+    names = {
+        "ra": ["(1 of 2)", "(2 of 2)"],
+        "rb": ["(1 of 3)", "(3 of 3)"],
+        "rc": ["(1 of 2)", "(1 of 2) "],
+        "rd": ["", " "],
+        "re": [""],
+    }
+    zp = str(tmp_path / "FFIEC CDR Call Bulk All Schedules 03312024.zip")
+    with zipfile.ZipFile(zp, "w") as zf:
+        for sched, suffixes in names.items():
+            for sfx in suffixes:
+                zf.writestr(
+                    f"FFIEC CDR Call Schedule {sched.upper()} 03312024{sfx}.txt", ""
+                )
+    got = {
+        r["schedule"]: (r["claimed"], r["found_parts"], r["parts"], r["errors"])
+        for r in resolve_n_parts(zip_member_manifest(spark, [zp])).collect()
+    }
+    assert got == {
+        "ra": (2, 2, [1, 2], []),
+        "rb": (3, 2, [1, 3], ["count-mismatch", "non-contiguous"]),
+        "rc": (2, 2, [1, 1], ["duplicate-parts", "non-contiguous"]),
+        "rd": (2, 2, [], ["count-mismatch"]),
+        "re": (1, 1, [], []),
+    }
 
 
 def test_wide_schedule_semantics(spark, processed):
@@ -377,6 +415,9 @@ def test_strict_clean_read_gate(spark, tmp_path_factory):
     log = res["log"].collect()
     assert len(log) == 1 and not log[0]["ok"]
     assert "unrepairable" in log[0]["repairs"]
+    # nothing was written, yet the log still counts the malformed
+    # numeric of bank 1003 (the short row's missing field is no problem)
+    assert log[0]["n_problems"] == 1
 
     out_lenient = tmp_path_factory.mktemp("broken_lenient")
     res2 = ffiec_process(spark, [zp], TYPE_DICT, str(out_lenient))
@@ -427,6 +468,144 @@ def test_pure_column_violation_fails_fast(spark, tmp_path_factory):
             "FFIEC CDR Call Schedule RX 03312024.txt", "\n".join(lines) + "\n"
         )
     out = tmp_path_factory.mktemp("pure_viol_out")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(ValueError, match="percent-format violation"):
         ffiec_process(spark, [zp], {"RCFDA224": "c"}, str(out), ["RCFDA224"])
     assert not [f for f in os.listdir(str(out)) if f.startswith("rx_")]
+    # the raising ingest still released its cached read pass
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
+
+
+def _two_part_zip(dir_: str) -> str:
+    """RX in two parts; part 2 (the right-hand join branch of the
+    combine) carries malformed numerics: bank 1002 in one typed field,
+    bank 1003 in two."""
+    import os
+    import zipfile
+
+    part1 = ["IDRSSD\tRCFD0010\t", "ID\tCash\t"] + [
+        f"{1000 + i}\t{i}.5\t" for i in range(1, 5)
+    ]
+    part2 = [
+        "IDRSSD\tRCFD2170\tRCON6724\t", "ID\tAssets\tOffices\t",
+        "1001\t100\t1\t", "1002\toops\t2\t", "1003\tbad\tx9\t",
+        "1004\t400\t4\t",
+    ]
+    zp = os.path.join(dir_, "FFIEC CDR Call Bulk All Schedules 03312024.zip")
+    with zipfile.ZipFile(zp, "w") as zf:
+        for n, lines in ((1, part1), (2, part2)):
+            zf.writestr(
+                f"FFIEC CDR Call Schedule RX 03312024({n} of 2).txt",
+                "\n".join(lines) + "\n",
+            )
+    return zp
+
+
+def test_problem_count_rides_the_wide_write(spark, tmp_path_factory):
+    """Type-parse problems in part 2 of a two-part schedule are counted
+    by the observe() in that part's join branch during the wide write:
+    the log row carries coerced-invalid-values and the same count as
+    member_stats summed over the parts."""
+    import zipfile
+
+    from ffiec_pq_spark.sources.tsv import (
+        make_colspec,
+        member_stats,
+        read_zip_member_header,
+        zip_member_lines,
+    )
+
+    zp = _two_part_zip(str(tmp_path_factory.mktemp("two_part")))
+    res = ffiec_process(
+        spark, [zp], TYPE_DICT, str(tmp_path_factory.mktemp("two_part_out"))
+    )
+    with zipfile.ZipFile(zp) as zf:
+        members = zf.namelist()
+    expect = sum(
+        member_stats(
+            zip_member_lines(spark, zp, m),
+            make_colspec(read_zip_member_header(zp, m), TYPE_DICT),
+        )[1]
+        for m in members
+    )
+    (row,) = res["log"].collect()
+    assert row["ok"] and row["repairs"] == ["coerced-invalid-values"]
+    assert row["n_problems"] == expect == 2
+    wide = {r["IDRSSD"]: r for r in spark.read.parquet(res["wide"][0]["path"]).collect()}
+    assert wide[1002]["RCFD2170"] is None and wide[1002]["RCON6724"] == 2
+    assert wide[1004]["RCFD0010"] == 4.5 and wide[1004]["RCFD2170"] == 400.0
+
+
+def test_part_without_data_lines(spark, tmp_path_factory):
+    """A part with only its header rows joins as all-NULL columns and
+    adds no problems (its empty join branch reports no metric)."""
+    import os
+    import zipfile
+
+    d = str(tmp_path_factory.mktemp("empty_part"))
+    zp = os.path.join(d, "FFIEC CDR Call Bulk All Schedules 03312024.zip")
+    with zipfile.ZipFile(zp, "w") as zf:
+        zf.writestr(
+            "FFIEC CDR Call Schedule RX 03312024(1 of 2).txt",
+            "IDRSSD\tRCFD0010\t\nID\tCash\t\n1001\toops\t\n1002\t2.5\t\n",
+        )
+        zf.writestr(
+            "FFIEC CDR Call Schedule RX 03312024(2 of 2).txt",
+            "IDRSSD\tRCFD2170\t\nID\tAssets\t\n",
+        )
+    res = ffiec_process(spark, [zp], TYPE_DICT, str(tmp_path_factory.mktemp("empty_part_out")))
+    (row,) = res["log"].collect()
+    assert row["ok"] and row["n_problems"] == 1
+    wide = spark.read.parquet(res["wide"][0]["path"]).collect()
+    assert sorted((r["IDRSSD"], r["RCFD0010"], r["RCFD2170"]) for r in wide) == [
+        (1001, None, None), (1002, 2.5, None),
+    ]
+
+
+class _JobGroupClock:
+    """``ffiec_process(clock=)`` that runs each stage under its own
+    Spark job group, so the jobs of every stage can be counted."""
+
+    def __init__(self, spark, tag: str) -> None:
+        self.sc = spark.sparkContext
+        self.tag = tag
+        self.stages: set[str] = set()
+
+    @contextmanager
+    def stage(self, name: str):
+        prev = self.sc.getLocalProperty("spark.jobGroup.id")
+        self.sc.setJobGroup(f"{self.tag}:{name}", name)
+        self.stages.add(name)
+        try:
+            yield
+        finally:
+            self.sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    def jobs(self) -> dict[str, int]:
+        tracker = self.sc.statusTracker()
+        return {
+            s: len(tracker.getJobIdsForGroup(f"{self.tag}:{s}"))
+            for s in sorted(self.stages)
+        }
+
+
+def test_ingest_job_counts(spark, raw_dir, tmp_path_factory):
+    """The manifest, the multipart validation and the per-part parse
+    run no Spark job; the read pass and its audit are one cached
+    extraction plus one aggregate.  The total pins the job count of a
+    fixture ingest (two groups, one of them repaired, plus the POR)."""
+    import uuid
+
+    clock = _JobGroupClock(spark, f"ingest-{uuid.uuid4().hex}")
+    zp = next(
+        r["zipfile"]
+        for r in list_bulk_zips(spark, raw_dir).collect()
+        if r["kind"] == "All Schedules"
+    )
+    ffiec_process(
+        spark, [zp], TYPE_DICT, str(tmp_path_factory.mktemp("jobs_out")),
+        PURE_COLS, clock=clock,
+    )
+    jobs = clock.jobs()
+    assert jobs["manifest_validate"] == 0 and jobs["parse_repair"] == 0, jobs
+    assert sum(jobs.values()) == INGEST_JOBS, jobs

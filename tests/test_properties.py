@@ -551,7 +551,7 @@ def test_leakage_safe_split_colocates_duplicates(spark, tmp_path):
 
 _cell = st.sampled_from(
     ["1.5", "-2", "abc", "", "NA", "N/A", "0", "20240331", "00000000",
-     "3.14e2", " 7 ", "x y"]
+     "3.14e2", " 7 ", "x y", "\r", "\u0085", "\u2028"]
 )
 _row = st.lists(_cell, min_size=3, max_size=6)  # 4 = correct field count
 
@@ -563,18 +563,16 @@ _row = st.lists(_cell, min_size=3, max_size=6)  # 4 = correct field count
     rows_b=st.lists(_row, min_size=1, max_size=6),
     crlf=st.booleans(),
 )
-def test_zip_stats_batch_parity_fuzz(spark, tmp_path_factory, rows_a, rows_b, crlf):
-    """The one-job whole-zip audit must equal the per-member path for
-    ARBITRARY cell soup: NA tokens, date sentinels, unparsable typed
-    fields, wrong field counts, CRLF endings."""
+def test_read_pass_parity_fuzz(spark, tmp_path_factory, rows_a, rows_b, crlf):
+    """The one-pass read must equal the per-member path for ARBITRARY
+    cell soup: NA tokens, date sentinels, unparsable typed fields,
+    wrong field counts, CRLF endings, and the line terminators Java's
+    regex ``$`` honours but Python's split does not (\\r, \\u0085,
+    \\u2028)."""
     import zipfile as _zf
 
-    from ffiec_pq_spark.sources.tsv import (
-        make_colspec,
-        member_stats,
-        zip_member_lines,
-        zip_stats_batch,
-    )
+    from ffiec_pq_spark.sources.tsv import make_colspec
+    from tests.test_sources import assert_pass_matches_member_stats
 
     header = ["IDRSSD", "VAL_D", "DT_D", "TXT_C"]
     type_dict = {"VAL_D": "d", "DT_D": "D", "TXT_C": "c"}
@@ -597,10 +595,7 @@ def test_zip_stats_batch_parity_fuzz(spark, tmp_path_factory, rows_a, rows_b, cr
         for m in ("Schedule A 03312024(1 of 2).txt",
                   "Schedule A 03312024(2 of 2).txt")
     }
-    batch = zip_stats_batch(spark, zp, colspecs)
-    for m, spec in colspecs.items():
-        expect = member_stats(zip_member_lines(spark, zp, m, skip=2), spec)
-        assert batch[m] == expect, (m, batch[m], expect)
+    assert_pass_matches_member_stats(spark, zp, colspecs)
 
 
 _anchor_sets = st.lists(

@@ -108,18 +108,59 @@ def test_single_file_sink_sort_by_orders_the_file(spark, tmp_path):
     assert got == sorted(got), got
 
 
-def test_zip_stats_batch_matches_member_stats(spark, tmp_path):
-    """The whole-zip one-job audit batch must reproduce member_stats'
-    (bad, problems) counters member-for-member — including the broken
-    zip's short row and malformed numeric."""
+def pass_stats(spark, zp, colspecs):
+    """``{member: (repaired, n_bad, n_problems)}`` from the ETL's read
+    pass: one cached zip_lines frame, the member_audit aggregate, and
+    each member's problem count observed on a parse's first action."""
+    from pyspark.sql import functions as F
+
+    from ffiec_pq_spark.sources.tsv import member_audit, parse_observed, zip_lines
+
+    lines = zip_lines(
+        spark, zp, {m: (2, len(spec)) for m, spec in colspecs.items()}
+    ).cache()
+    try:
+        audits = member_audit(lines)
+        out = {}
+        for m, spec in colspecs.items():
+            repaired, n_bad = audits.get(m, (False, 0))
+            n_problems = 0
+            if m in audits:
+                df, count = parse_observed(lines.filter(F.col("member") == m), spec)
+                df.collect()
+                n_problems = count()
+            out[m] = (repaired, n_bad, n_problems)
+        return out
+    finally:
+        lines.unpersist()
+
+
+def assert_pass_matches_member_stats(spark, zp, colspecs):
+    """The read pass against the per-member Spark reference: a member
+    is repaired iff member_stats finds a bad line in its raw lines; a
+    clean member's counters equal member_stats over its raw lines, a
+    repaired member's equal member_stats over its repaired lines."""
+    from ffiec_pq_spark.sources.tsv import member_stats, zip_member_lines
+
+    got = pass_stats(spark, zp, colspecs)
+    for m, spec in colspecs.items():
+        raw = member_stats(zip_member_lines(spark, zp, m, skip=2), spec)
+        repaired, n_bad, n_problems = got[m]
+        assert repaired == (raw[0] > 0), (m, got[m], raw)
+        expect = raw if not repaired else member_stats(
+            zip_member_lines(spark, zp, m, skip=2, repair_expected_cols=len(spec)),
+            spec,
+        )
+        assert (n_bad, n_problems) == expect, (m, got[m], expect)
+
+
+def test_read_pass_matches_member_stats(spark, tmp_path):
+    """The one-pass read (zip_lines + member_audit + observed problem
+    counts) must reproduce member_stats' (bad, problems) counters
+    member-for-member — including the broken zip's short row and
+    malformed numeric."""
     from ffiec_fixtures import TYPE_DICT, make_broken_zip, make_call_zip
-    from ffiec_pq_spark.sources.tsv import (
-        make_colspec,
-        member_stats,
-        read_zip_member_header,
-        zip_member_lines,
-        zip_stats_batch,
-    )
+    from ffiec_pq_spark.sources.tsv import make_colspec, read_zip_member_header
 
     for builder in (make_call_zip, make_broken_zip):
         d = tmp_path / builder.__name__
@@ -133,11 +174,32 @@ def test_zip_stats_batch_matches_member_stats(spark, tmp_path):
             m: make_colspec(read_zip_member_header(zp, m), TYPE_DICT)
             for m in members
         }
-        batch = zip_stats_batch(spark, zp, colspecs)
-        for m in members:
-            lines = zip_member_lines(spark, zp, m, skip=2)
-            expect = member_stats(lines, colspecs[m])
-            assert batch[m] == expect, (builder.__name__, m, batch[m], expect)
+        assert_pass_matches_member_stats(spark, zp, colspecs)
+
+
+def test_n_fields_matches_spark_split(spark):
+    """The pass's Python field count equals Spark's
+    size(split(regexp_replace(value, "\\t$", ""), "\\t", -1)) on the
+    cells where Java's ``$`` differs from Python's: a trailing tab
+    followed by one final line terminator (\\r, \\u0085, \\u2028,
+    \\u2029) is dropped too."""
+    from ffiec_pq_spark.sources.tsv import n_fields
+
+    values = [
+        "", "\t", "a", "a\t", "a\tb", "a\t\t", "\t\t\t",
+        "a\t\r", "a\t\x85", "a\t\u2028", "a\t\u2029", "a\t\u2028\t",
+        "a\t\x85\x85", "a\t\r\x85", "\x85\t", "\u2028", "a\u2028\tb",
+        "a\t\t\u2029",
+    ]
+    df = spark.createDataFrame(list(enumerate(values)), "i int, value string")
+    got = {
+        r["i"]: r["n"]
+        for r in df.select(
+            "i",
+            F.size(F.split(F.regexp_replace("value", "\t$", ""), "\t", -1)).alias("n"),
+        ).collect()
+    }
+    assert [n_fields(v) for v in values] == [got[i] for i in range(len(values))]
 
 
 def test_zip_lines_python_datasource(spark, tmp_path):
